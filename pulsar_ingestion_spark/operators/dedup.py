@@ -903,12 +903,22 @@ class ConvergenceError(RuntimeError):
     Raise rather than return wrong clusters (ADVICE r2)."""
 
 
+def _until_stable(step, state, max_iters: int, what: str):
+    """The connected-components loops' one driver: ``state, stable =
+    step(state)`` until ``stable``; raises :class:`ConvergenceError` when
+    ``max_iters`` rounds run out first."""
+    for _ in range(max_iters):
+        state, stable = step(state)
+        if stable:
+            return state
+    raise ConvergenceError(f"{what}: still changing after {max_iters} iterations")
+
+
 def near_dup_clusters(
     pairs: DataFrame,
     nodes: DataFrame,
     id_col: str = "doc_id",
     max_iters: int = 25,
-    strict: bool = True,
 ) -> DataFrame:
     """Connected components over a near-dup pair graph: every doc gets
     ``cluster_id`` = the minimum doc id reachable through pairs (its own id
@@ -924,18 +934,16 @@ def near_dup_clusters(
     can false-converge (ADVICE r2).  ``localCheckpoint`` truncates lineage
     so the plan stays bounded across iterations.  At 100 TB this is the
     standard Spark CC shape (cf. GraphFrames/large-star small-star); the
-    pair graph is orders of magnitude smaller than the corpus.
-
-    ``strict=True`` raises :class:`ConvergenceError` if ``max_iters`` is
-    exhausted while labels are still moving (the result would be wrong);
-    ``strict=False`` downgrades that to a warning log.
+    pair graph is orders of magnitude smaller than the corpus.  Raises
+    :class:`ConvergenceError` if ``max_iters`` is exhausted while labels
+    are still moving (the result would be wrong).
     """
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).unionByName(
         pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
     ).localCheckpoint(eager=True)
     labels = nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("label"))
-    converged = False
-    for _ in range(max_iters):
+
+    def step(labels):
         neigh = edges.join(labels, edges["dst"] == labels["id"]).select(
             F.col("src").alias("id"), F.col("label")
         )
@@ -952,17 +960,9 @@ def near_dup_clusters(
             .limit(1)
             .count()
         )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        msg = f"near_dup_clusters: labels still changing after {max_iters} iterations"
-        if strict:
-            raise ConvergenceError(msg)
-        import warnings
+        return new_labels, changed == 0
 
-        warnings.warn(msg, stacklevel=2)
+    labels = _until_stable(step, labels, max_iters, "near_dup_clusters labels")
     return labels.select("id", F.col("label").alias("cluster_id"))
 
 
@@ -971,7 +971,6 @@ def near_dup_clusters_lss(
     nodes: DataFrame,
     id_col: str = "doc_id",
     max_iters: int = 20,
-    strict: bool = True,
 ) -> DataFrame:
     """Connected components by large-star / small-star alternation
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
@@ -993,8 +992,8 @@ def near_dup_clusters_lss(
     count-equality plus one empty difference implies equality).  No
     hash/sum signature — a wrapped-mod-2^64 sum can false-converge on
     large id spaces (ADVICE r2).  ``localCheckpoint`` truncates lineage
-    per round.  ``strict=True`` raises :class:`ConvergenceError` when
-    ``max_iters`` is exhausted before stability.
+    per round.  Raises :class:`ConvergenceError` when ``max_iters`` is
+    exhausted before stability.
     """
     e = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
     # undirected edge list, both orientations
@@ -1003,9 +1002,9 @@ def near_dup_clusters_lss(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    prev_cnt = edges.count()
-    converged = False
-    for _ in range(max_iters):
+
+    def step(state):
+        edges, prev_cnt = state
         # large-star: every neighbor v > u links to m(u) = min(N(u) + {u})
         m = edges.groupBy("u").agg(F.min("v").alias("minv"))
         m = m.select("u", F.least("minv", "u").alias("m"))
@@ -1037,18 +1036,11 @@ def near_dup_clusters_lss(
         )
         new_cnt = new_edges.count()
         stable = new_cnt == prev_cnt and new_edges.exceptAll(edges).limit(1).count() == 0
-        edges = new_edges
-        prev_cnt = new_cnt
-        if stable:
-            converged = True
-            break
-    if not converged:
-        msg = f"near_dup_clusters_lss: edge set still changing after {max_iters} iterations"
-        if strict:
-            raise ConvergenceError(msg)
-        import warnings
+        return (new_edges, new_cnt), stable
 
-        warnings.warn(msg, stacklevel=2)
+    edges, _ = _until_stable(
+        step, (edges, edges.count()), max_iters, "near_dup_clusters_lss edge set"
+    )
     roots = edges.groupBy("u").agg(F.min("v").alias("minv"))
     labels = nodes.select(F.col(id_col).alias("id")).join(
         roots.select(F.col("u").alias("id"), "minv"), "id", "left"

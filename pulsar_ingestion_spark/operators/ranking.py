@@ -21,9 +21,14 @@ distributed way:
 exact ``ntile`` semantics (first ``n % t`` tiles get the extra row), so
 results are bit-identical to the single-task window and to an ANSI
 ``ntile`` oracle.
+
+:func:`keep_best` is the per-group ``row_number() = 1`` winner as ONE
+struct-extreme aggregate (map-side partials, no partition sort).
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -422,3 +427,43 @@ def keyed_running_sums(
         *[f"_off_{c}" for c in sum_cols],
     )
     return out, totals
+
+
+def keep_best(
+    order: Sequence[tuple[Column | str, str]], payload: Sequence[Column | str]
+) -> Column:
+    """Aggregate keeping each group's best row — the ``row_number() = 1``
+    winner of ``ORDER BY order`` — as ONE max/min over a struct: map-side
+    partials ship one candidate per group per task, no partition sort.
+
+    ``order`` is ``(key, "asc" | "desc")`` pairs, most significant first;
+    keys are numeric (pass a timestamp as its epoch number).  Returns a
+    struct of the ``payload`` columns with their original values.  NULL
+    and NaN keys never win (every key orders NULLS LAST, NaN counted as
+    NULL); the payload only breaks ties on every key.
+
+    Encoding: ``max`` when the first key is descending, else ``min``.  A
+    key running the other way is negated with ``try_subtract(0, k)`` —
+    exact for every numeric type, unlike bitwise NOT, which rejects
+    doubles (a Column has no type to dispatch on).  Its one NULL, the
+    integral minimum, is ranked by a flag ahead of it, so
+    ``Long.MinValue`` neither fails an ANSI query nor wraps to the wrong
+    winner.  Under ``min`` each key is led by an is-null flag, or min
+    would pick the NULL."""
+    if not order or any(d not in ("asc", "desc") for _, d in order):
+        raise ValueError(f"keep_best needs ('key', 'asc'|'desc') pairs: {order!r}")
+    use_max = order[0][1] == "desc"
+    fields = []
+    for key, direction in order:
+        k = F.col(key) if isinstance(key, str) else key
+        k = F.when(~F.isnan(k), k)  # NaN -> NULL
+        if not use_max:
+            fields.append(k.isNull())
+        if (direction == "desc") != use_max:
+            neg = F.try_subtract(F.lit(0), k)
+            fields.append(k.isNotNull() & neg.isNull())
+            k = neg
+        fields.append(k)
+    named = [c.alias(f"_k{i}") for i, c in enumerate(fields)]
+    agg = F.max if use_max else F.min
+    return agg(F.struct(*named, F.struct(*payload).alias("p"))).getField("p")

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from pulsar_ingestion_spark.functions.text import STOPWORDS
 from pulsar_ingestion_spark.operators.legacy import translate_legacy
+from pulsar_ingestion_spark.operators.ranking import keep_best
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import fan_out, load_tables
 
@@ -710,14 +711,15 @@ def cmf_events_explode(spark, sf_dir):
     """,
 )
 def agg_max_min_by(spark, sf_dir):
-    # argmax/argmin via lexicographic struct extremes — max_by alone is
-    # tie-UNSTABLE across engines (events.value repeats within groups);
-    # (value, event_id) struct ordering makes the winning row unique.
+    # argmax/argmin via keep_best — max_by alone is tie-UNSTABLE across
+    # engines (events.value repeats within groups); the (value,
+    # event_id) order makes the winning row unique.
     ev = load_tables(spark, sf_dir)["events"]
-    key = F.struct(F.col("value").alias("v"), F.col("event_id").alias("i"))
+    top = keep_best([("value", "desc"), ("event_id", "desc")], ["event_id"])
+    bottom = keep_best([("value", "asc"), ("event_id", "asc")], ["event_id"])
     return ev.groupBy("user_id").agg(
-        F.max(key).getField("i").alias("top_event"),
-        F.min(key).getField("i").alias("bottom_event"),
+        top.getField("event_id").alias("top_event"),
+        bottom.getField("event_id").alias("bottom_event"),
         F.max("value").alias("max_value"),
     )
 
@@ -875,14 +877,16 @@ def join_broadcast_left(spark, sf_dir):
     """,
 )
 def agg_first_per_day(spark, sf_dir):
-    # Deterministic "first event per user per day" via struct-min argmin —
-    # daily-activity anchor rows without a window pass (one agg shuffle).
+    # Deterministic "first event per user per day" via a keep_best argmin
+    # — daily-activity anchor rows without a window pass (one agg shuffle).
     ev = load_tables(spark, sf_dir)["events"]
-    key = F.struct(F.unix_millis("ts").alias("ms"), F.col("event_id").alias("id"))
+    first = keep_best(
+        [(F.unix_millis("ts"), "asc"), ("event_id", "asc")], ["event_id"]
+    )
     return ev.groupBy(
         "user_id", F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day")
     ).agg(
-        F.min(key).getField("id").alias("first_event_id"),
+        first.getField("event_id").alias("first_event_id"),
         F.count("*").alias("day_events"),
     )
 

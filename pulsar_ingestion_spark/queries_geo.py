@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from pulsar_ingestion_spark.functions.geo import haversine_km
+from pulsar_ingestion_spark.operators.ranking import keep_best
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import fan_out, load_tables
 
@@ -128,7 +129,8 @@ def q_geo_nearest_poi(spark, sf_dir):
         ).alias("dist_km"),
     )
     best = scored.groupBy("event_id").agg(
-        F.min(F.struct("dist_km", "poi_id")).alias("b")
+        keep_best([("dist_km", "asc"), ("poi_id", "asc")], ["poi_id", "dist_km"])
+        .alias("b")
     )
     return best.select(
         "event_id",

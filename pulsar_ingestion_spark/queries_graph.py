@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.operators.ranking import keep_best
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import fan_out, load_tables
 
@@ -208,6 +209,23 @@ SELECT degree, count(*) AS n_nodes FROM deg GROUP BY degree
 """
 
 
+def _endpoints(e, other: str = "v"):
+    """Both endpoints (``u`` and ``other``) of every edge as ``node`` rows."""
+    return e.select(F.col("u").alias("node")).unionAll(e.select(F.col(other).alias("node")))
+
+
+def _degrees(e, name: str = "d"):
+    """(node, ``name``) degree of every endpoint of a (u, v) edge relation."""
+    return _endpoints(e).groupBy("node").agg(F.count(F.lit(1)).alias(name))
+
+
+def _bidir(edges):
+    """(node, nbr) rows for both orientations of each (u, v) edge."""
+    return edges.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
+        edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
+    )
+
+
 def _cooc_edges(ev):
     """Distinct co-occurrence edges (u < v) from (type, time-bucket) cells.
     Hot cells are capped at _COOC_CAP members FIRST (deterministic
@@ -274,13 +292,7 @@ def q_graph_degree_stats(spark, sf_dir):
     model-sized."""
     ev = load_tables(spark, sf_dir)["events"]  # no fan_out: the cap
     # window's (event_type, hr) exchange follows immediately (r13)
-    edges = _cooc_edges(ev)
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-    )
+    deg = _degrees(_cooc_edges(ev), "degree")
     return deg.groupBy("degree").agg(F.count("*").alias("n_nodes"))
 
 
@@ -331,12 +343,7 @@ def q_graph_triangle_count(spark, sf_dir):
     # MAP-SIDE by filtering each node's (nbr, deg) struct list, so the
     # old edges⋈deg⋈deg orientation joins and the oriented-edge
     # materialization disappear entirely.
-    bidir = (
-        edges.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
-        .unionAll(edges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
-        .repartition("nbr")
-        .persist()
-    )
+    bidir = _bidir(edges).repartition("nbr").persist()
     degn = bidir.groupBy("nbr").agg(F.count(F.lit(1)).alias("dn"))
     # Round 14 (VERDICT r13 item 3): orientation moves BEFORE the
     # adjacency groupBy.  The r13 form collected the FULL unoriented
@@ -462,25 +469,35 @@ SELECT k, n_nodes, n_edges FROM (
 """
 
 
+def _peel_until_stable(edges, peel_once):
+    """Count-stable peel driver shared by the k-core and k-truss peels:
+    apply ``peel_once`` to the (u, v) edge set until the edge count stops
+    changing.  ``localCheckpoint(eager=True)`` cuts the lineage per round
+    (the geo_dbscan_grid discipline — no driver materialization, only a
+    metadata-sized count crosses to the driver for the convergence
+    check).  Termination is guaranteed in <= |E| rounds because the
+    count strictly decreases until it holds."""
+    cur = edges.select("u", "v").localCheckpoint(eager=True)
+    n_cur = cur.count()
+    while n_cur > 0:
+        nxt = peel_once(cur).localCheckpoint(eager=True)
+        n_nxt = nxt.count()
+        if n_nxt == n_cur:
+            break
+        cur, n_cur = nxt, n_nxt
+    return cur
+
+
 def _peel_to_kcore(edges, k: int):
     """Distributed k-core peel: repeatedly drop edges with an endpoint of
     degree < k until the edge count stops changing.  Each round is one
-    map-side-combining degree aggregation plus two LEFT SEMI joins keyed
+    map-side-combining degree aggregation plus two LEFT ANTI joins keyed
     on the node — at cluster scale both shuffle on the node key and every
-    round's input strictly shrinks, the standard Pregel-style peel.
-    ``localCheckpoint(eager=True)`` cuts the lineage per round (the
-    geo_dbscan_grid discipline — no driver materialization, only a
-    metadata-sized count crosses to the driver for the convergence
-    check).  Termination is guaranteed in <= |E| rounds because the
-    count strictly decreases; the k-core fixpoint is unique regardless
-    of peel order, which is what makes the result oracle-checkable."""
+    round's input strictly shrinks, the standard Pregel-style peel.  The
+    k-core fixpoint is unique regardless of peel order, which is what
+    makes the result oracle-checkable."""
     def _peel_once(cur):
-        deg = (
-            cur.select(F.col("u").alias("node"))
-            .unionAll(cur.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("d"))
-        )
+        deg = _degrees(cur)
         # Round 13: anti-join against the BELOW-threshold set instead of
         # semi-join against the (large) survivor set — every endpoint has
         # a degree row, so "neither endpoint in bad" == "both degrees
@@ -496,15 +513,7 @@ def _peel_to_kcore(edges, k: int):
                   F.col("v") == F.col("vv"), "left_anti")
         )
 
-    cur = edges.select("u", "v").localCheckpoint(eager=True)
-    n_cur = cur.count()
-    while n_cur > 0:
-        nxt = _peel_once(cur).localCheckpoint(eager=True)
-        n_nxt = nxt.count()
-        if n_nxt == n_cur:
-            break
-        cur, n_cur = nxt, n_nxt
-    return cur
+    return _peel_until_stable(edges, _peel_once)
 
 
 @query("graph_kcore", oracle=_KCORE_ORACLE)
@@ -529,11 +538,7 @@ def q_graph_kcore(spark, sf_dir):
     reports = []
     for k in (2, 3, 4):
         cur = _peel_to_kcore(cur, k)
-        nodes_cnt = (
-            cur.select(F.col("u").alias("node"))
-            .unionAll(cur.select(F.col("v").alias("node")))
-            .agg(F.count_distinct("node").alias("n_nodes"))
-        )
+        nodes_cnt = _endpoints(cur).agg(F.count_distinct("node").alias("n_nodes"))
         edges_cnt = cur.agg(F.count("*").cast("bigint").alias("n_edges"))
         reports.append(
             nodes_cnt.crossJoin(F.broadcast(edges_cnt))
@@ -601,11 +606,7 @@ def q_graph_bfs_hops(spark, sf_dir):
     ev = load_tables(spark, sf_dir)["events"]  # no fan_out: the cap
     # window's (event_type, hr) exchange follows immediately (r13)
     edges = _cooc_edges(ev)
-    bidir = (
-        edges.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
-        .unionAll(edges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
-        .persist()
-    )
+    bidir = _bidir(edges).persist()
     seeds = bidir.select("node").distinct().orderBy("node").limit(_BFS_SEEDS)
     visited = bfs_hops(bidir, seeds, _BFS_MAX_HOPS)
     bidir.unpersist()
@@ -619,8 +620,11 @@ def bfs_hops_per_seed(bidir, seeds, max_hops: int):
     (src, node) relation; state is keyed on (src, node) so every seed's
     traversal advances in the same hop join — closeness previously ran
     ``bfs_hops`` once per seed, paying max_hops × #seeds checkpointed
-    rounds instead of max_hops.  Returns (src, node, dist) with the MIN
-    hop distance per (seed, node), dist <= max_hops."""
+    rounds instead of max_hops.  ``bidir`` is a (node, nbr) bidirectional
+    edge relation (persist it — every hop joins against it).  Returns
+    (src, node, dist) with the MIN hop distance per (seed, node), dist <=
+    max_hops.  Per hop: one node-keyed equi-join + one anti-join, lineage
+    cut per hop."""
     visited = seeds.select("src", "node").withColumn(
         "dist", F.lit(0)
     ).localCheckpoint(eager=True)
@@ -643,30 +647,11 @@ def bfs_hops_per_seed(bidir, seeds, max_hops: int):
 
 
 def bfs_hops(bidir, seeds, max_hops: int):
-    """Frontier-loop BFS: ``bidir`` is a (node, nbr) bidirectional edge
-    relation (persist it — every hop joins against it), ``seeds`` a
-    (node) relation at distance 0.  Returns (node, dist) with the MIN
-    hop distance per reachable node, dist <= max_hops.  Per hop: one
-    node-keyed equi-join + one anti-join, lineage cut per hop."""
-    visited = seeds.select("node").withColumn("dist", F.lit(0)).localCheckpoint(
-        eager=True
-    )
-    frontier = visited.select("node")
-    for d in range(1, max_hops + 1):
-        nxt = (
-            bidir.join(frontier, "node")
-            .select(F.col("nbr").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionAll(
-            nxt.withColumn("dist", F.lit(d))
-        ).localCheckpoint(eager=True)
-        frontier = nxt
-    return visited
+    """Multi-source BFS from the (node) relation ``seeds`` as ONE source:
+    :func:`bfs_hops_per_seed` with a constant ``src``.  Returns (node,
+    dist) with the MIN hop distance from any seed, dist <= max_hops."""
+    one_source = seeds.select(F.lit(0).alias("src"), "node")
+    return bfs_hops_per_seed(bidir, one_source, max_hops).drop("src")
 
 
 # ---------------------------------------------------------------------------
@@ -718,11 +703,10 @@ def label_propagation(edges, rounds: int):
     (node, label) after ``rounds`` rounds.  Each round is one join +
     one vote count + one per-node argmax (all partitioned by node).
 
-    Round 13: the per-node argmax is a ``max(struct(cnt, -label))``
-    hash aggregate instead of a row_number window — same (desc cnt,
-    asc label) winner (labels are node ids, so negation is a safe
-    order-flip), but partial map-side aggregation and no per-partition
-    sort: measured 6.44 → 5.54 s at sf0.1, output identical.
+    Round 13: the per-node (desc cnt, asc label) argmax is a
+    :func:`keep_best` aggregate instead of a row_number window — partial
+    map-side aggregation and no per-partition sort: measured 6.44 →
+    5.54 s at sf0.1, output identical.
 
     Round 13 (optimization): round 1 is evaluated ALGEBRAICALLY.  With
     id-seeded labels every neighbor votes its own id, and bidir rows
@@ -735,9 +719,7 @@ def label_propagation(edges, rounds: int):
     # every round's label join keys on nbr, so the cached partitioning
     # serves all of them — the edge relation is exchanged once, not once
     # per round (guide §2.4 — share the exchange).
-    bidir = edges.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
-        edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
-    ).repartition("nbr").persist()
+    bidir = _bidir(edges).repartition("nbr").persist()
     if rounds <= 0:
         return bidir.select("node").distinct().withColumn("label", F.col("node"))
     # Round 1 (algebraic min of neighbor ids) groups by NBR, riding the
@@ -755,10 +737,9 @@ def label_propagation(edges, rounds: int):
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
         best = votes.groupBy("node").agg(
-            F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg")))
-            .alias("b")
+            keep_best([("cnt", "desc"), ("label", "asc")], ["label"]).alias("b")
         )
-        labels = best.select("node", (-F.col("b.neg")).alias("label"))
+        labels = best.select("node", F.col("b.label").alias("label"))
     return labels
 
 
@@ -907,13 +888,7 @@ def jaccard_linkpred(edges, cap: int, topk: int, prescore: int = 4096,
     # adjacency groupBy all key on node, so one exchange up front serves
     # every consumer (guide §2.4 — share the exchange).  Measured 6.1 →
     # 3.8 s at sf0.1 on this id alone.
-    bidir = (
-        edges.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
-            edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
-        )
-        .repartition("node")
-        .persist()
-    )
+    bidir = _bidir(edges).repartition("node").persist()
     wcap = Window.partitionBy("node").orderBy(
         F.conv(F.substring(F.md5(F.col("nbr").cast("string")), 1, 8), 16, 10)
         .cast("bigint"),
@@ -977,11 +952,7 @@ def jaccard_linkpred(edges, cap: int, topk: int, prescore: int = 4096,
         if flat:
             adj = bidir.groupBy("node").agg(F.collect_list("nbr").alias("nbrs"))
         else:
-            need = (
-                wedges.select(F.col("u").alias("node"))
-                .unionAll(wedges.select(F.col("w").alias("node")))
-                .distinct()
-            )
+            need = _endpoints(wedges, "w").distinct()
             adj = (
                 bidir.join(need, "node", "left_semi")
                 .groupBy("node")
@@ -1022,11 +993,7 @@ def jaccard_linkpred(edges, cap: int, topk: int, prescore: int = 4096,
 
     def _exact(subset):
         # adjacency arrays ONLY for nodes this subset touches
-        need = (
-            subset.select(F.col("u").alias("node"))
-            .unionAll(subset.select(F.col("w").alias("node")))
-            .distinct()
-        )
+        need = _endpoints(subset, "w").distinct()
         adj = (
             bidir.join(need, "node", "left_semi")
             .groupBy("node")
@@ -1105,12 +1072,7 @@ def q_graph_assortativity(spark, sf_dir):
 def degree_assortativity(edges):
     """Pearson correlation of endpoint degrees over the symmetrized
     (u, v) edge list — see q_graph_assortativity for the plan shape."""
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = _degrees(edges)
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
     joined = edges.join(du, "u").join(dv, "v")
@@ -1193,12 +1155,7 @@ def q_graph_modularity(spark, sf_dir):
 def newman_modularity(edges, labels):
     """Newman modularity Q of a (node, label) partition over undirected
     (u, v) edges — see q_graph_modularity for the formula and plan."""
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = _degrees(edges)
     m_cnt = edges.count()
     lu = labels.select(F.col("node").alias("u"), F.col("label").alias("lu"))
     lv = labels.select(F.col("node").alias("v"), F.col("label").alias("lv"))
@@ -1270,13 +1227,7 @@ def q_graph_clustering_coeff(spark, sf_dir):
     ev = load_tables(spark, sf_dir)["events"]  # no fan_out: the cap
     # window's (event_type, hr) exchange follows immediately (r13)
     edges = _cooc_edges(ev).persist()
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .persist()
-    )
+    deg = _degrees(edges, "degree").persist()
     du, dv = deg.alias("du"), deg.alias("dv")
     u_first = (F.col("du.degree") < F.col("dv.degree")) | (
         (F.col("du.degree") == F.col("dv.degree")) & (F.col("u") < F.col("v"))
@@ -1368,11 +1319,7 @@ def q_graph_closeness_centrality(spark, sf_dir):
     ev = load_tables(spark, sf_dir)["events"]  # no fan_out: the cap
     # window's (event_type, hr) exchange follows immediately (r13)
     edges = _cooc_edges(ev)
-    bidir = (
-        edges.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
-        .unionAll(edges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
-        .persist()
-    )
+    bidir = _bidir(edges).persist()
     # Round 13: ALL seeds traverse in one (src, node)-keyed frontier loop
     # (bfs_hops_per_seed) — max_hops checkpointed rounds total instead of
     # max_hops × #seeds.  Seeds stay a model-sized relation; no driver
@@ -1661,24 +1608,16 @@ def _peel_to_ktruss(edges, k: int):
     """Distributed k-truss peel: drop edges with support < k-2 until the
     edge count stops changing.  Each round is one ordered triangle
     enumeration (edge-keyed hash joins) + one left join; the input
-    strictly shrinks, lineage is cut per round (the k-core
-    discipline), and only a metadata-sized count crosses to the
-    driver."""
-    cur = edges.select("u", "v").localCheckpoint(eager=True)
-    n_cur = cur.count()
-    while n_cur > 0:
-        sup = _edge_support(cur)
-        nxt = (
-            cur.join(sup, ["u", "v"], "left")
+    strictly shrinks, and the k-core peel's driver cuts lineage per
+    round."""
+    def _peel_once(cur):
+        return (
+            cur.join(_edge_support(cur), ["u", "v"], "left")
             .filter(F.coalesce(F.col("s"), F.lit(0)) >= k - 2)
             .select("u", "v")
-            .localCheckpoint(eager=True)
         )
-        n_nxt = nxt.count()
-        if n_nxt == n_cur:
-            break
-        cur, n_cur = nxt, n_nxt
-    return cur
+
+    return _peel_until_stable(edges, _peel_once)
 
 
 @query("graph_ktruss", oracle=_KTRUSS_ORACLE)
@@ -1699,9 +1638,7 @@ def q_graph_ktruss(spark, sf_dir):
     t4 = _peel_to_ktruss(t3, 4)
     rows = []
     for k, t in ((3, t3), (4, t4)):
-        nodes = t.select(F.col("u").alias("node")).unionAll(
-            t.select(F.col("v").alias("node"))
-        )
+        nodes = _endpoints(t)
         rows.append(
             t.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
             .crossJoin(

@@ -29,6 +29,7 @@ from pulsar_ingestion_spark.functions.text import (
     token_count,
     word_count,
 )
+from pulsar_ingestion_spark.operators.ranking import keep_best
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import fan_out, load_tables
 
@@ -75,16 +76,16 @@ def q_dedup_fingerprint(spark, sf_dir):
 def q_dedup_keep_best(spark, sf_dir):
     # Corpus-dedup policy: within an exact-duplicate group keep the
     # highest-quality copy (here: most words; real pipelines use the
-    # quality score), tie-broken to the LOWEST doc_id via negated-id
-    # struct max — same lexicographic-extreme trick both engines share.
+    # quality score), tie-broken to the LOWEST doc_id — one keep_best
+    # aggregate.
     docs = load_tables(spark, sf_dir)["documents"]
     wc = F.size(F.split(F.trim(F.col("text")), r"\s+"))
     scored = docs.select(
         "doc_id", F.md5("text").alias("content_hash"), wc.alias("wc")
     )
-    key = F.struct(F.col("wc").alias("wc"), (-F.col("doc_id")).alias("id"))
+    best = keep_best([("wc", "desc"), ("doc_id", "asc")], ["doc_id"])
     return scored.groupBy("content_hash").agg(
-        (F.max(key).getField("id") * -1).alias("kept_id"),
+        best.getField("doc_id").alias("kept_id"),
         F.count("*").alias("dup_cnt"),
     )
 
@@ -1487,16 +1488,12 @@ def q_corpus_curate(spark, sf_dir):
     # keep-best as ONE hash aggregate on the digest shuffle (r3 used
     # groupBy(h) + join-back = the same data shuffled twice; r13 used a
     # row_number window = a per-digest sort of every duplicate): the
-    # (words desc, doc_id asc) winner is max(struct(words, -doc_id)), so
+    # (words desc, doc_id asc) winner is one keep_best aggregate, so
     # map-side partials ship ONE candidate row per digest per task (r14).
-    # Trailing struct fields are payload only — (words, -doc_id) is
-    # already unique because doc_id is.
     out = filtered.groupBy("h").agg(
-        F.max(
-            F.struct(
-                F.col("words"), (-F.col("doc_id")).alias("negid"),
-                F.col("doc_id"), F.col("lang"), F.col("text"), F.col("quality"),
-            )
+        keep_best(
+            [("words", "desc"), ("doc_id", "asc")],
+            ["doc_id", "lang", "words", "text", "quality"],
         ).alias("top")
     )
     return out.select(

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.operators.ranking import keep_best
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import load_tables
 
@@ -83,11 +84,11 @@ def q_emb_kmeans_lloyd(spark, sf_dir):
         "cid",
         _spark_d2(F.col("embedding"), F.col("cvec")).alias("d2"),
     )
-    # per-vector argmin over k candidates: min(struct(d2, cid)) folds
+    # per-vector argmin over k candidates: one keep_best aggregate folds
     # map-side inside the broadcast-join stage — no window, no shuffle
     # of the corpus
     assigned = scored.groupBy("vec_id").agg(
-        F.min(F.struct("d2", "cid", "embedding")).alias("b")
+        keep_best([("d2", "asc"), ("cid", "asc")], ["cid", "embedding"]).alias("b")
     ).select(F.col("b.cid").alias("cid"), F.col("b.embedding").alias("vec"))
     comp = assigned.select("cid", F.posexplode("vec").alias("dim", "vf")).select(
         "cid", "dim", F.col("vf").cast("double").alias("v")
@@ -772,7 +773,11 @@ def q_dedup_semantic_cluster(spark, sf_dir):
     )
     assigned = (
         scored.groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cid", "embedding")).alias("b"))
+        .agg(
+            keep_best(
+                [("d2", "asc"), ("cid", "asc")], ["cid", "d2", "embedding"]
+            ).alias("b")
+        )
         .select(
             "vec_id",
             F.col("b.cid").alias("cid"),
@@ -1185,17 +1190,14 @@ def q_sim_search_mmr(spark, sf_dir):
     s1 = cands.filter(F.col("rnk") == 1).select(
         "query_id", F.col("cand_id").alias("sel"), F.col("rel").alias("score")
     )
-    # per-step argmax = max(struct(mmr, -cand_id)): hash aggregate
-    # instead of a row_number sort (r14); mmr is a non-null rounded score
+    # per-step (mmr desc, cand_id asc) argmax: one keep_best aggregate
+    # instead of a row_number sort (r14)
     def argmax(m):
         return (
             m.groupBy("query_id")
             .agg(
-                F.max(
-                    F.struct(
-                        F.col("mmr"), (-F.col("cand_id")).alias("negid"),
-                        F.col("cand_id"),
-                    )
+                keep_best(
+                    [("mmr", "desc"), ("cand_id", "asc")], ["cand_id", "mmr"]
                 ).alias("top")
             )
             .select("query_id", F.col("top.cand_id").alias("sel"),
@@ -1628,25 +1630,23 @@ def q_ml_best_f1_threshold(spark, sf_dir):
             2.0 * F.col("cum_y") / (F.col("k") + F.col("pos_total")), 6
         ).alias("f1"),
     )
-    # argmax as ONE map-side-combining aggregate: max(struct(f1, -k,
-    # payload)) picks the best F1 with smallest-k tie-break and carries
-    # the operating point out — no sort, no TakeOrdered heap over the
-    # full ranked relation (measured 2.9x at the 10x point with
-    # orderBy().limit(1); 1.0x-class with the struct-max).
+    # argmax as ONE map-side-combining keep_best aggregate: the best F1
+    # with smallest-k tie-break carries the operating point out — no
+    # sort, no TakeOrdered heap over the full ranked relation (measured
+    # 2.9x at the 10x point with orderBy().limit(1); 1.0x-class with the
+    # struct-max).
     best = f1s.agg(
-        F.max(
-            F.struct(
-                F.col("f1"), (-F.col("k")).alias("nk"),
-                F.col("p"), F.col("cum_pos"), F.col("pos_total"),
-            )
+        keep_best(
+            [("f1", "desc"), ("k", "asc")],
+            ["f1", "k", "p", "cum_pos", "pos_total"],
         ).alias("b")
     )
     b = F.col("b")
     return best.select(
-        (-b.getField("nk")).cast("bigint").alias("best_k"),
+        b.getField("k").cast("bigint").alias("best_k"),
         F.round(b.getField("p"), 6).alias("threshold"),
         F.round(
-            b.getField("cum_pos").cast("double") / (-b.getField("nk")), 6
+            b.getField("cum_pos").cast("double") / b.getField("k"), 6
         ).alias("precision_at"),
         F.round(
             b.getField("cum_pos").cast("double") / b.getField("pos_total"), 6

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.operators.ranking import keep_best
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import fan_out, load_tables
 
@@ -681,8 +682,7 @@ def q_exp_sprt_boundary(spark, sf_dir):
         F.min(F.when(F.col("cllr") >= up, F.col("pos"))).alias("first_accept"),
         F.min(F.when(F.col("cllr") <= lo, F.col("pos"))).alias("first_reject"),
         F.max("pos").alias("n"),
-        F.max(F.struct(F.col("pos"), F.col("cllr"))).getField("cllr")
-        .alias("llr_final"),
+        keep_best([("pos", "desc")], ["cllr"]).getField("cllr").alias("llr_final"),
     )
     fa, fr = F.col("first_accept"), F.col("first_reject")
     return crossed.select(

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.operators.ranking import keep_best
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import load_tables
 
@@ -649,12 +650,12 @@ def q_sketch_quantile_logbins(spark, sf_dir):
         .select("q", F.ceil(F.col("q") * F.col("n")).cast("bigint").alias("target"))
     )
     hits = targets.join(cum, F.col("cum_cnt") >= F.col("target"))
-    # first qualifying bin per quantile = min(struct(ndig, lead2)) — a
-    # hash aggregate with map-side partials instead of a row_number
-    # partition sort (r14 keep-best discipline; both fields non-null)
+    # first qualifying bin per quantile — one keep_best aggregate with
+    # map-side partials instead of a row_number partition sort (r14)
+    first_bin = keep_best([("ndig", "asc"), ("lead2", "asc")], ["ndig", "lead2"])
     return (
         hits.groupBy("q", "target")
-        .agg(F.min(F.struct("ndig", "lead2")).alias("top"))
+        .agg(first_bin.alias("top"))
         .select(
             "q", "target",
             (

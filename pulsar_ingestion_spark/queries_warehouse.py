@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.operators.ranking import keep_best
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import load_tables
 
@@ -547,14 +548,17 @@ def q_warehouse_changelog_compact(spark, sf_dir):
     # version ties exist in the synthetic log (duplicate (key, version)
     # rows); extend the ordering over every output column so the winner
     # is unique up to full-row equality — either copy hashes the same.
-    # The all-descending total order makes the rn=1 winner the MAX of the
-    # (version, price, quantity) tuple, so one hash aggregate replaces the
-    # partition sort: map-side partials ship one candidate per key per
-    # task instead of every log row through a sort (r14).  op trails the
-    # struct: it is a function of (key, version), so it can only tie.
+    # One keep_best aggregate replaces the partition sort: map-side
+    # partials ship one candidate per key per task instead of every log
+    # row through a sort (r14).  op is payload only: it is a function of
+    # (key, version), so it can only tie.
+    latest = keep_best(
+        [("version", "desc"), ("price", "desc"), ("quantity", "desc")],
+        ["version", "price", "quantity", "op"],
+    )
     return (
         log.groupBy("key")
-        .agg(F.max(F.struct("version", "price", "quantity", "op")).alias("top"))
+        .agg(latest.alias("top"))
         .filter(F.col("top.op") != "D")
         .select(
             "key", F.col("top.version").alias("last_version"),
@@ -807,20 +811,22 @@ def q_warehouse_merge_resolve_conflicts(spark, sf_dir):
     explicit no-ops, as MERGE semantics demand."""
     (od,) = _t(spark, sf_dir, "orders")
     li = load_tables(spark, sf_dir)["lineitem"]
-    # The resolution ORDER BY is all-descending over a total order, so
-    # the rn=1 winner is the MAX of the column tuple: one hash aggregate
-    # (map-side partials — one candidate + a count per key per task)
-    # replaces the row_number partition sort, and n_versions rides the
-    # same aggregate instead of a second window pass (r14).
+    # The resolution ORDER BY is a total order, so one keep_best
+    # aggregate (map-side partials — one candidate + a count per key per
+    # task) replaces the row_number partition sort, and n_versions rides
+    # the same aggregate instead of a second window pass (r14).
+    latest = keep_best(
+        [
+            (F.unix_micros("l_shipdate"), "desc"), ("l_linenumber", "desc"),
+            ("l_extendedprice", "desc"), ("l_quantity", "desc"),
+            ("l_discount", "desc"),
+        ],
+        ["l_extendedprice", "l_quantity"],
+    )
     resolved = (
         li.groupBy(F.col("l_orderkey").alias("key"))
         .agg(
-            F.max(
-                F.struct(
-                    "l_shipdate", "l_linenumber", "l_extendedprice",
-                    "l_quantity", "l_discount",
-                )
-            ).alias("top"),
+            latest.alias("top"),
             F.count("*").alias("n_versions"),
         )
         .select(
@@ -975,9 +981,9 @@ def q_warehouse_scd2_from_changelog(spark, sf_dir):
     join consumes.  Keyed subset (orderkey % 50) keeps the checked
     output bounded; the plan is key-count independent."""
     li = load_tables(spark, sf_dir)["lineitem"]
-    # all-descending total order ⇒ the latest-wins row per (entity,
-    # effective date) is max(struct(...)) — hash aggregate with map-side
-    # partials instead of a row_number partition sort (r14)
+    # the latest-wins row per (entity, effective date) is one keep_best
+    # aggregate with map-side partials instead of a row_number partition
+    # sort (r14)
     changes = (
         li.filter(F.col("l_orderkey") % 50 == 0)
         .select(
@@ -988,8 +994,12 @@ def q_warehouse_scd2_from_changelog(spark, sf_dir):
         )
         .groupBy("l_orderkey", "eff_date")
         .agg(
-            F.max(
-                F.struct("l_linenumber", "price", "l_quantity", "l_discount")
+            keep_best(
+                [
+                    ("l_linenumber", "desc"), ("price", "desc"),
+                    ("l_quantity", "desc"), ("l_discount", "desc"),
+                ],
+                ["price"],
             ).alias("top")
         )
         .select("l_orderkey", "eff_date", F.col("top.price").alias("price"))

@@ -2,10 +2,10 @@
 batch ``corpus_temperature_mix`` query (queries_corpus.py).
 
 Merge algebra (streaming/sketches.py design discipline): per-source
-token counts merge by ADD — NOT idempotent — so the maintainer keeps a
-batch-id high-watermark (the CMS/quantile rule; replayed
-``batch_id <= seen`` batches are skipped).  Per batch the distributed
-side is one map-side-combined token-count aggregate over the batch's
+token counts merge by ADD — NOT idempotent — so the maintainer sits
+behind the shared batch-id high-watermark
+(:class:`~pulsar_ingestion_spark.streaming.sketches.ReplayGuarded`).
+Per batch the distributed side is one map-side-combined token-count aggregate over the batch's
 own documents; driver state is one counter per source (few-key
 discipline, guarded).
 
@@ -23,8 +23,10 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.streaming.sketches import ReplayGuarded
 
-class MixturePlanMaintainer:
+
+class MixturePlanMaintainer(ReplayGuarded):
     """foreachBatch target tracking per-source whitespace token mass and
     answering the temperature-scaled mixture plan."""
 
@@ -35,12 +37,8 @@ class MixturePlanMaintainer:
         self.budget_factor = budget_factor
         self.max_sources = max_sources
         self._tokens: dict = {}
-        self._seen_batch = -1
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self._seen_batch:
-            return  # replay — ADD merge is not idempotent
-        self._seen_batch = batch_id
+    def _merge(self, batch_df: DataFrame, batch_id: int) -> None:
         rows = (
             batch_df.groupBy(self.source_col)
             .agg(

@@ -3,7 +3,8 @@
 chosen explicitly (the design lesson of streaming/sketches.py):
 
 * **row / null counts merge by ADD — not idempotent**, so the
-  maintainer keeps a batch-id high-watermark (the CMS discipline) and
+  maintainer sits behind the shared batch-id high-watermark
+  (:class:`~pulsar_ingestion_spark.streaming.sketches.ReplayGuarded`) and
   the counts are EXACT for any micro-batch cut: they equal the batch
   profile of the union of the delivered batches.
 * **distinct cardinality is NOT add-mergeable with bounded state**
@@ -32,16 +33,23 @@ tests pin.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pulsar_ingestion_spark.streaming.sketches import (
     HllStreamMaintainer,
     MgStreamMaintainer,
+    ReplayGuarded,
 )
 
+# Cap on the per-batch action pool: 1 + 2·|cols| actions overlap, but
+# past 8 concurrent Spark jobs the driver only adds scheduling contention.
+_MAX_POOL = 8
 
-class ProfileStreamMaintainer:
+
+class ProfileStreamMaintainer(ReplayGuarded):
     """foreachBatch target maintaining a per-column profile (row count,
     null count, HLL distinct estimate, MG modal-candidate set) over
     ``cols``."""
@@ -52,11 +60,8 @@ class ProfileStreamMaintainer:
         self.n_null: dict[str, int] = {c: 0 for c in self.cols}
         self._hll = {c: HllStreamMaintainer(c) for c in self.cols}
         self._mg = {c: MgStreamMaintainer(c, budget=mg_budget) for c in self.cols}
-        self.last_batch = -1
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if int(batch_id) <= self.last_batch:
-            return  # at-least-once replay: counts/MG add-merge, skip whole batch
+    def _merge(self, batch_df: DataFrame, batch_id: int) -> None:
         strs = batch_df.select(
             *[F.col(c).cast("string").alias(c) for c in self.cols]
         )
@@ -67,9 +72,8 @@ class ProfileStreamMaintainer:
         # (guide §2.6: actions are only sequential because driver code
         # calls them sequentially); each sub-maintainer mutates only its
         # own driver state, from exactly one thread.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1 + 2 * len(self.cols)) as pool:
+        workers = min(_MAX_POOL, 1 + 2 * len(self.cols))
+        with ThreadPoolExecutor(max_workers=workers) as pool:
             fcounts = pool.submit(
                 lambda: strs.agg(
                     F.count(F.lit(1)).alias("_n"),
@@ -89,7 +93,6 @@ class ProfileStreamMaintainer:
         self.n_rows += int(counts["_n"])
         for c in self.cols:
             self.n_null[c] += int(counts["_n"]) - int(counts[c])
-        self.last_batch = int(batch_id)
 
     def profile(self) -> dict[str, dict]:
         """Per-column snapshot: exact counts, HLL distinct estimate,

@@ -3,9 +3,9 @@ batch ``sketch_quantile_logbins`` query (queries_sketch.py:616).
 
 Merge algebra (streaming/sketches.py design discipline): decimal
 log-bin counts merge by cell-wise ADD — NOT idempotent — so the
-maintainer keeps a batch-id high-watermark exactly like the CMS/MG
-maintainers (foreachBatch ids are monotone per checkpoint; a replayed
-``batch_id <= seen`` is skipped).  Binning is pure integer/string math
+maintainer sits behind the shared batch-id high-watermark
+(:class:`~pulsar_ingestion_spark.streaming.sketches.ReplayGuarded`,
+like the CMS/MG maintainers).  Binning is pure integer/string math
 (digit count + two leading digits of the integer cent amount — never a
 float log), identical to the batch query, so the stream-maintained
 sketch answers the SAME quantile estimates as the batch sketch of the
@@ -24,8 +24,10 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.streaming.sketches import ReplayGuarded
 
-class QuantileLogbinsStreamMaintainer:
+
+class QuantileLogbinsStreamMaintainer(ReplayGuarded):
     """foreachBatch target maintaining decimal log-bin counts over a
     positive numeric column; ``quantile(q)`` answers the lower bound of
     the first bin whose cumulative count reaches ceil(q*n) — <=5%
@@ -36,12 +38,8 @@ class QuantileLogbinsStreamMaintainer:
         self.col = col
         self._bins: dict = {}  # (ndig, lead2) -> count
         self._n = 0
-        self._seen_batch = -1
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self._seen_batch:
-            return  # replay — ADD-merge is not idempotent (CMS rule)
-        self._seen_batch = batch_id
+    def _merge(self, batch_df: DataFrame, batch_id: int) -> None:
         cents = batch_df.filter(F.col(self.col) > 0).select(
             F.floor(F.col(self.col) * 100).cast("bigint").alias("c")
         )

@@ -3,16 +3,19 @@ batch ``events_seasonal_dow_hour`` query, with each statistic's merge
 algebra chosen explicitly (the streaming/profile.py design lesson):
 
 * **per-cell event counts and DECIMAL value sums merge by ADD — not
-  idempotent**, so the maintainer keeps a batch-id high-watermark (the
-  CMS discipline).  Counts, means, shares and intensities are then
-  EXACT for any micro-batch cut: identical to the batch query over the
-  union of the delivered batches (the equivalence tests pin equality
-  row-for-row).
+  idempotent**, so the maintainer sits behind the shared batch-id
+  high-watermark
+  (:class:`~pulsar_ingestion_spark.streaming.sketches.ReplayGuarded`).
+  Both actions are collected before any state changes, so a batch that
+  fails half-way leaves nothing merged and is merged whole on retry.
+  Counts, means, shares and intensities are then EXACT for any
+  micro-batch cut: identical to the batch query over the union of the
+  delivered batches (the equivalence tests pin equality row-for-row).
 * **per-cell distinct users is NOT add-mergeable with bounded state**,
   so each cell keeps a portable-HLL register set (register max-merge —
   idempotent), and ``grid()`` reports the HLL estimate where the batch
   query reports the exact countDistinct.  The estimate is cut-invariant
-  and replay-proof by the max-merge algebra.
+  by the max-merge algebra.
 
 Per batch the maintainer runs TWO distributed actions over the
 micro-batch: one fused (dow, hr) counts/sums aggregate (<= 168 rows
@@ -32,12 +35,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pulsar_ingestion_spark.queries_sketch import _HLL_M, _RHO_CASE
-from pulsar_ingestion_spark.streaming.sketches import hll_estimate
+from pulsar_ingestion_spark.streaming.sketches import ReplayGuarded, hll_estimate
 
 _CELLS = 168  # 7 dows x 24 hours
 
 
-class SeasonalGridMaintainer:
+class SeasonalGridMaintainer(ReplayGuarded):
     """foreachBatch target maintaining the per-(dow, hour-of-day) grid
     of event counts, exact DECIMAL value sums and per-cell HLL user
     registers over an events-shaped stream."""
@@ -50,7 +53,6 @@ class SeasonalGridMaintainer:
         self.n_events: dict[tuple[int, int], int] = {}
         self.sum_value: dict[tuple[int, int], Decimal] = {}
         self.registers: dict[tuple[int, int], dict[int, int]] = {}
-        self.last_batch = -1
 
     def _cells(self, batch_df: DataFrame) -> DataFrame:
         return batch_df.select(
@@ -62,27 +64,16 @@ class SeasonalGridMaintainer:
             F.col(self.value_col).alias("v"),
         )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        counted = int(batch_id) <= self.last_batch
+    def _merge(self, batch_df: DataFrame, batch_id: int) -> None:
         cells = self._cells(batch_df)
-        if not counted:
-            # ADD-merged exact counts/sums — batch-id guarded
-            rows = (
-                cells.groupBy("dow", "hr")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.col("v").cast("decimal(18,4)")).alias("s"),
-                )
-                .collect()
+        rows = (
+            cells.groupBy("dow", "hr")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col("v").cast("decimal(18,4)")).alias("s"),
             )
-            for r in rows:
-                key = (int(r["dow"]), int(r["hr"]))
-                self.n_events[key] = self.n_events.get(key, 0) + int(r["n"])
-                self.sum_value[key] = self.sum_value.get(key, Decimal(0)) + (
-                    Decimal(str(r["s"])) if r["s"] is not None else Decimal(0)
-                )
-            self.last_batch = int(batch_id)
-        # register MAX-merge — idempotent, safe to re-run on replay
+            .collect()
+        )
         hv = F.conv(
             F.substring(
                 F.md5(F.concat(F.lit("hll:"), F.col("u").cast("string"))), 1, 8
@@ -101,6 +92,14 @@ class SeasonalGridMaintainer:
             .agg(F.expr(f"max({_RHO_CASE})").alias("register"))
             .collect()
         )
+        # both collects done: ADD-merge the counts/sums, MAX-merge the
+        # registers
+        for r in rows:
+            key = (int(r["dow"]), int(r["hr"]))
+            self.n_events[key] = self.n_events.get(key, 0) + int(r["n"])
+            self.sum_value[key] = self.sum_value.get(key, Decimal(0)) + (
+                Decimal(str(r["s"])) if r["s"] is not None else Decimal(0)
+            )
         for r in regs:
             key = (int(r["dow"]), int(r["hr"]))
             cell = self.registers.setdefault(key, {})

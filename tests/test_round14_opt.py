@@ -66,12 +66,25 @@ def test_ranking_boundaries_are_frozen_literals(spark):
         ("corpus_curate", True),
         # corpus_assemble keeps its genuine pack-sequence cumsum window
         ("corpus_assemble", False),
+        ("dedup_keep_best", True),
+        ("agg_mode", True),
+        ("emb_kmeans_lloyd", True),
+        ("dedup_semantic_cluster", True),
+        ("geo_nearest_poi", True),
+        ("agg_max_min_by", True),
+        ("agg_first_per_day", True),
+        # genuine windows elsewhere: the co-occurrence cap's dense_rank,
+        # the cumulative-count window, keyed_running_sums' window
+        ("graph_label_propagation", False),
+        ("graph_modularity", False),
+        ("sketch_quantile_logbins", False),
+        ("exp_sprt_boundary", False),
     ],
 )
 def test_latest_wins_is_a_hash_aggregate(spark, name, window_free):
     """Round 14: the latest-wins / keep-best resolution (total order,
-    rn=1) runs as max(struct(...)) — a hash aggregate with map-side
-    partials — not as a row_number partition sort."""
+    rn=1) runs as one keep_best max/min(struct(...)) aggregate with
+    map-side partials — not as a row_number partition sort."""
     import __spark_entry__ as e
 
     plan = _formatted(e.queries()[name](spark, SF_DIR))
@@ -79,7 +92,9 @@ def test_latest_wins_is_a_hash_aggregate(spark, name, window_free):
     assert "row_number" not in plan, f"{name}: row_number partition sort is back"
     if window_free:
         assert "Window" not in plan, f"{name}: a window survived the rewrite"
-    assert "partial_max" in plan, f"{name}: map-side partial max missing"
+    assert "partial_max" in plan or "partial_min" in plan, (
+        f"{name}: map-side partial max/min missing"
+    )
 
 
 def test_keyed_running_sums_theta_budget(spark):

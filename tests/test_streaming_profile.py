@@ -99,3 +99,26 @@ def test_profile_replay_is_a_no_op(spark):
     assert m.profile()["lang"]["n_rows"] == 2 * before["lang"]["n_rows"]
     # ...but the HLL distinct estimate is unchanged (idempotent algebra)
     assert m.profile()["lang"]["distinct_est"] == before["lang"]["distinct_est"]
+
+
+def test_profile_thread_pool_is_capped(spark, monkeypatch):
+    """1 + 2·|cols| concurrent actions, capped at 8 threads: five
+    columns would ask for 11."""
+    from pulsar_ingestion_spark.streaming import profile
+
+    sizes = []
+    real = profile.ThreadPoolExecutor
+
+    def spy(max_workers):
+        sizes.append(max_workers)
+        return real(max_workers=max_workers)
+
+    monkeypatch.setattr(profile, "ThreadPoolExecutor", spy)
+    cols = ["a", "b", "c", "d", "e"]
+    df = spark.createDataFrame([(1, 2, 3, 4, None), (5, 6, 7, 8, 9)], ",".join(
+        f"{c} int" for c in cols))
+    m = profile.ProfileStreamMaintainer(cols)
+    m(df, 0)
+    assert sizes == [8]
+    prof = m.profile()
+    assert prof["e"]["n_rows"] == 2 and prof["e"]["n_null"] == 1

@@ -55,7 +55,6 @@ def main() -> None:
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag
     )
     os.makedirs(outdir, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="stream-plans-")
 
     captured: list[tuple[str, str]] = []  # (action label, plan text)
     watching = False
@@ -81,10 +80,7 @@ def main() -> None:
 
         return wrapped
 
-    DataFrame.collect = spy_collect
-    VersionedTable.stream_batch_committer = spy_committer
-
-    def run(name: str, process, batches, extra: list[tuple[str, str]] = ()):
+    def run(name: str, process, batches, extra: tuple[tuple[str, str], ...] = ()):
         nonlocal watching
         captured.clear()
         for i, b in enumerate(batches):
@@ -102,6 +98,18 @@ def main() -> None:
         spark.catalog.clearCache()
         print(name, "ok", f"({len(captured) + len(extra)} plans)")
 
+    tmp = tempfile.mkdtemp(prefix="stream-plans-")
+    DataFrame.collect = spy_collect
+    VersionedTable.stream_batch_committer = spy_committer
+    try:
+        _capture_all(spark, tabs, run, tmp)
+    finally:
+        DataFrame.collect = real_collect
+        VersionedTable.stream_batch_committer = real_committer
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _capture_all(spark, tabs, run, tmp: str) -> None:
     ev, docs, emb = tabs["events"], tabs["documents"], tabs["embeddings"]
     li = tabs["lineitem"].withColumn("_id", F.monotonically_increasing_id())
     ev_cuts = cuts(ev, "user_id", N_BATCHES)
@@ -124,7 +132,7 @@ def main() -> None:
         "ann_index",
         stream_ann_index(ann_root, app_id="cp", dim=64, num_planes=8),
         emb_cuts,
-        extra=[("ann_search read path", _explain(ann_search(spark, ann_root, qdf, 64)))],
+        extra=(("ann_search read path", _explain(ann_search(spark, ann_root, qdf, 64))),),
     )
     run("dedup_cascade", stream_dedup_cascade(os.path.join(tmp, "casc"), app_id="cp"),
         doc_cuts)
@@ -132,10 +140,6 @@ def main() -> None:
     run("sketch_cms", CmsStreamMaintainer("event_type"), ev_cuts)
     run("sketch_mg", MgStreamMaintainer("event_type"), ev_cuts)
     run("skyline", SkylineStreamMaintainer("l_quantity", "l_extendedprice"), li_cuts)
-
-    DataFrame.collect = real_collect
-    VersionedTable.stream_batch_committer = real_committer
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":
