@@ -51,10 +51,24 @@ def filter_routable(df: DataFrame, tenant_col: str = "tenantId") -> DataFrame:
     return df.filter(not_blank(F.col(tenant_col)))
 
 
-def topic_for_tenant(tenant_col: str = "tenantId") -> Column:
+def topic_for_tenant(
+    tenant_col: str = "tenantId",
+    template: str = "persistent://{tenant}/integration/telemetry",
+) -> Column:
     """The computed destination (Filterer.kt:36) as a column, for sinks
-    that take a per-row topic (Kafka/Pulsar)."""
-    return F.concat(F.lit("persistent://"), F.col(tenant_col), F.lit("/integration/telemetry"))
+    that take a per-row topic.  Every ``{tenant}`` in ``template`` is
+    replaced by the tenant column, so the tenant can sit anywhere in the
+    topic name; the default is the reference's layout."""
+    parts = template.split("{tenant}")
+    if len(parts) < 2:
+        raise ValueError(f"topic template must contain '{{tenant}}' (got {template!r})")
+    cols = []
+    for i, part in enumerate(parts):
+        if part:
+            cols.append(F.lit(part))
+        if i < len(parts) - 1:
+            cols.append(F.col(tenant_col))
+    return F.concat(*cols)
 
 
 def route_to_tenant_dirs(
@@ -75,36 +89,3 @@ def route_to_tenant_dirs(
     routable.select(F.col("tenantId"), F.col(payload_col)).write.mode(mode).partitionBy(
         "tenantId"
     ).parquet(base_path)
-
-
-def prepare_kafka_routing(df: DataFrame, payload_col: str = "value") -> DataFrame:
-    """Shape a routable stream for Spark's Kafka sink with PER-ROW topics:
-    the sink reads the ``topic`` column, so the computed destination
-    (Filterer.kt:36) needs no foreachBatch at all.  Kafka topic names
-    forbid '/', so the Pulsar-style URI is sanitized to
-    ``<tenantId>.integration.telemetry``.
-
-    Start with:
-        prepare_kafka_routing(extract_tenant(df)).writeStream
-            .format("kafka").option("kafka.bootstrap.servers", ...).start()
-    """
-    routable = filter_routable(df)
-    topic = F.concat(F.col("tenantId"), F.lit(".integration.telemetry"))
-    return routable.select(
-        topic.alias("topic"),
-        F.col(payload_col).cast("string").alias("value"),
-    )
-
-
-def route_stream_to_tenant_dirs(stream_df: DataFrame, base_path: str, checkpoint: str, payload_col: str = "value"):
-    """Streaming form: readStream → foreachBatch(partitioned write).
-    Micro-batch epoch commits + checkpointing replace the reference's
-    fire-and-forget sendAsync (Filterer.kt:41) with a stronger guarantee."""
-    def _write(batch: DataFrame, epoch_id: int) -> None:
-        route_to_tenant_dirs(batch, base_path, payload_col=payload_col, mode="append")
-
-    return (
-        stream_df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )

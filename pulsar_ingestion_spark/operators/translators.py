@@ -141,14 +141,6 @@ def _validity(parsed: Column, required: Iterable[str]) -> Column:
     return cond
 
 
-def _split(df: DataFrame, payload_col: str, schema, required, cmf_builder, dead_letter: bool,
-           cache_key=None):
-    return _split_with_extra(
-        df, payload_col, schema, required, lambda p: F.lit(True), cmf_builder, dead_letter,
-        cache_key=cache_key,
-    )
-
-
 # Built Column trees are pure unresolved expressions (they reference input
 # columns by NAME, not by DataFrame), so they are reusable across any
 # DataFrame with a ``payload_col`` string column.  Building them is pure
@@ -213,14 +205,17 @@ def translate_geotab(
     def _valid_extra(p: Column) -> Column:
         return iso8601_to_epoch_millis(p.getField("Record_DateTime")).isNotNull()
 
-    return _split_with_extra(
-        df, payload_col, GEOTAB_RAW_SCHEMA, required, _valid_extra, _build, dead_letter,
+    return _split(
+        df, payload_col, GEOTAB_RAW_SCHEMA, required, _build, dead_letter, _valid_extra,
         cache_key=("geotab", tenant, payload_col),
     )
 
 
-def _split_with_extra(df, payload_col, schema, required, extra_pred, cmf_builder, dead_letter,
-                      cache_key=None):
+def _split(df, payload_col, schema, required, cmf_builder, dead_letter, extra_pred=None,
+           cache_key=None):
+    """Parse ``payload_col`` once, keep the rows whose document parses with
+    every ``required`` field (and passes ``extra_pred`` when given) as
+    ``cmf``; with ``dead_letter`` also return the rejected originals."""
     # Dead-letter discipline: the reference logs+drops malformed input
     # (GeotabTranslator.kt:154-157); we keep the originals addressable.
     def _build_exprs():
@@ -233,9 +228,9 @@ def _split_with_extra(df, payload_col, schema, required, extra_pred, cmf_builder
         # array(x) always has one element, so row counts are unchanged and a
         # malformed parse (null struct) still flows to the dead-letter branch.
         parsed_c = F.explode(F.array(F.from_json(raw, schema)))
-        valid_c = (
-            raw.isNotNull() & _validity(F.col("_parsed"), required) & extra_pred(F.col("_parsed"))
-        )
+        valid_c = raw.isNotNull() & _validity(F.col("_parsed"), required)
+        if extra_pred is not None:
+            valid_c = valid_c & extra_pred(F.col("_parsed"))
         return parsed_c, valid_c, cmf_builder(F.col("_parsed"))
 
     if cache_key is not None:
@@ -328,8 +323,8 @@ def translate_ford(
             & c.getField("ts").isNotNull()
         )
 
-    return _split_with_extra(
-        df, payload_col, FORD_RAW_SCHEMA, FORD_REQUIRED, _valid_extra, _build, dead_letter,
+    return _split(
+        df, payload_col, FORD_RAW_SCHEMA, FORD_REQUIRED, _build, dead_letter, _valid_extra,
         cache_key=("ford", tenant, payload_col),
     )
 

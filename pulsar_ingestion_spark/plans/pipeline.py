@@ -3,27 +3,46 @@
 The reference provisions: source connectors → raw-<source> topics →
 translator functions → one CMF topic → Filterer → per-tenant topics
 (deployment/pipeline.yaml:1-68, docs/architecture.md:105-118).  Here one
-spec instantiates the same topology as a single Structured Streaming
-query:
+spec instantiates the same topology as one query:
 
     for each source: open_source → translate_<kind>
     union all branches (unionByName — the shared CMF topic)
-    route: extract tenant → drop unroutable → partitioned sink
+    route: extract tenant → drop unroutable → routed sink
 
-One streaming query instead of N processes: the translate branches are
-narrow (no shuffle) and fuse into the scan; only the sink write fans out
-by tenant directory.  Micro-batch checkpointing replaces the reference's
-fire-and-forget async publish with at-least-once + idempotent appends.
+The translate branches are narrow (no shuffle) and fuse into the scan.
+:func:`_routed_writer` is the one place a sink is chosen and
+:func:`_save_or_start` the one tail that runs it, for the routed sink and
+the dead-letter sink alike:
+
+    sink              batch (streaming=False)   streaming (per micro-batch)
+    publish={...}     topic sink, one append    topic sink query
+    "foreachBatch"    tenantId-partitioned      the same append per batch
+                      parquet append            (at-least-once in a failed epoch)
+    "native"          tenantId-partitioned      Spark file sink: _spark_metadata
+                      parquet append            commit log, exactly-once
+    "versioned"       VersionedTable.append     manifest commit keyed by batch
+                                                id: exactly-once, time travel
+    dead_letter_path  parquet append            parquet file sink,
+                                                checkpoint + "-dead"
+
+Streaming queries use ``spec.checkpoint`` and availableNow by default, or
+processingTime when ``spec.trigger_interval`` is set.
 """
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pulsar_ingestion_spark.operators.filterer import extract_tenant, filter_routable
+from pulsar_ingestion_spark.operators.filterer import (
+    extract_tenant,
+    filter_routable,
+    topic_for_tenant,
+)
 from pulsar_ingestion_spark.operators.translators import (
     cmf_to_json,
     translate_calamp,
@@ -31,7 +50,8 @@ from pulsar_ingestion_spark.operators.translators import (
     translate_geotab,
     union_cmf,
 )
-from pulsar_ingestion_spark.sources.registry import open_source
+from pulsar_ingestion_spark.operators.versioned import VersionedTable
+from pulsar_ingestion_spark.sources.registry import open_source, open_topic_sink
 
 TRANSLATORS = {
     "geotab": translate_geotab,
@@ -89,50 +109,29 @@ class PipelineSpec:
     output_path: str          # base dir for per-tenant partitioned output
     checkpoint: str | None = None
     dead_letter_path: str | None = None
-    # "foreachBatch": idempotent-append dynamic sink (flexible, at-least-once
-    #   within a failed epoch); "native": Spark's transactional file sink
-    #   (_spark_metadata commit log -> exactly-once file visibility);
-    #   "versioned": manifest-per-version table (operators/versioned.py) —
-    #   exactly-once via batch-id-in-manifest, plus snapshot isolation,
-    #   time travel, and rollback over the landed data.
+    # "foreachBatch" | "native" | "versioned" — see the sink table above
     sink_mode: str = "foreachBatch"
     # None -> availableNow (drain-and-stop: backfills, tests, cron runs);
     # an interval string like "30 seconds" -> continuous micro-batching.
     trigger_interval: str | None = None
-    # cap rows per output file (parquet writer splits beyond this) — the
-    # per-tenant file-sizing knob; None = Spark default (no cap)
-    max_records_per_file: int | None = None
     # Topic publish (relay) mode — the reference Filterer's per-tenant
-    # publish (Filterer.kt dynamic outputs; deployment/pipeline.yaml
-    # relay): when set, the routed stream publishes to a topic sink
-    # instead of landing parquet.  {"kind": "pulsar"|"kafka"|"eventhub"|
-    # "jsonl", "topic_prefix": "..."| "topic_template": "...{tenant}...",
-    # **connector options} — each record goes to topic
-    # `<topic_prefix><tenantId>`, or to the template with every `{tenant}`
-    # occurrence substituted (the reference Filterer's layout is
-    # persistent://${tenantId}/integration/telemetry — tenant mid-URL, so
-    # a prefix alone can't express it), via open_topic_sink's
-    # dynamic-topic contract (jsonl = broker-less bridge, value lines
+    # publish (Filterer.kt dynamic outputs): when set, the routed stream
+    # goes to a topic sink instead of landing parquet.  {"kind": "pulsar"|
+    # "kafka"|"eventhub"|"jsonl", "topic_template": "...{tenant}..." or
+    # "topic_prefix": "...", **connector options}; a prefix P means the
+    # template P{tenant} (jsonl = broker-less bridge, value lines
     # partitioned by topic dir).
     publish: dict | None = None
 
 
-
-def _with_trigger(writer, spec: "PipelineSpec"):
-    """availableNow (drain-and-stop) by default; processingTime interval
-    when spec.trigger_interval is set (continuous service mode)."""
-    if spec.trigger_interval:
-        return writer.trigger(processingTime=spec.trigger_interval)
-    return writer.trigger(availableNow=True)
-
-def build_cmf_stream(spark: SparkSession, spec: PipelineSpec, streaming: bool = True) -> DataFrame:
-    """Wire sources → translators → canonical CMF stream (wire JSON in
-    `value`, tenant extracted for routing).
-
-    With ``spec.dead_letter_path`` set, malformed originals from every
-    source are unioned and appended there (tagged by source kind/translator)
-    — the observable upgrade of the reference's log-and-vaporize policy
-    (GeotabTranslator.kt:154-157).
+def build_cmf_stream(
+    spark: SparkSession, spec: PipelineSpec, streaming: bool = True
+) -> tuple[DataFrame, DataFrame | None]:
+    """Wire sources → translators → ``(wire, dead)``: the canonical CMF
+    stream (wire JSON in ``value``) and, with ``spec.dead_letter_path``
+    set, the malformed originals of every source tagged by source
+    kind/translator (else None) — the observable upgrade of the
+    reference's log-and-vaporize policy (GeotabTranslator.kt:154-157).
     """
     if not spec.sources:
         raise ValueError("PipelineSpec.sources is empty — nothing to ingest")
@@ -155,12 +154,8 @@ def build_cmf_stream(spark: SparkSession, spec: PipelineSpec, streaming: bool = 
         branches.append(good.select("cmf"))
     cmf = union_cmf(*branches)
     wire = cmf_to_json(cmf, out_col="value").select("value")
-    if dead_branches:
-        dead_all = dead_branches[0]
-        for d in dead_branches[1:]:
-            dead_all = dead_all.unionByName(d)
-        return wire, dead_all
-    return wire
+    dead = reduce(DataFrame.unionByName, dead_branches) if dead_branches else None
+    return wire, dead
 
 
 def _checkpoint_max_batch(checkpoint: str) -> int:
@@ -169,29 +164,87 @@ def _checkpoint_max_batch(checkpoint: str) -> int:
     file names ARE the batch ids.  -1 for a dir with no batches yet.
     Used to evidence-gate the legacy-watermark migration: a reset
     checkpoint's small ids must not inherit a large legacy watermark."""
-    import os as _os
-
     mx = -1
     for sub in ("offsets", "commits"):
-        d = _os.path.join(checkpoint, sub)
-        if not _os.path.isdir(d):
+        d = os.path.join(checkpoint, sub)
+        if not os.path.isdir(d):
             continue
-        for name in _os.listdir(d):
+        for name in os.listdir(d):
             if name.isdigit():
                 mx = max(mx, int(name))
     return mx
 
 
+def _routed_writer(spec: PipelineSpec, out: DataFrame, streaming: bool):
+    """The one place the routed sink is chosen (the module's sink table).
+    Returns a configured writer, or a foreachBatch body ``fn(df, batch_id)``
+    for the sinks that run their own write per batch."""
+    if spec.publish is not None:
+        opts = dict(spec.publish)
+        kind = opts.pop("kind")
+        prefix = opts.pop("topic_prefix", "tenant-")
+        template = opts.pop("topic_template", prefix + "{tenant}")
+        topics = out.select(topic_for_tenant(template=template).alias("__route_topic"), "value")
+        return open_topic_sink(
+            topics, kind, streaming=streaming, topic_column="__route_topic", **opts
+        )
+    if spec.sink_mode == "native":
+        writer = out.writeStream if streaming else out.write
+        return writer.format("parquet").partitionBy("tenantId").option("path", spec.output_path)
+    if spec.sink_mode == "versioned":
+        # The versioned layout is file-list based, not tenant-dir based:
+        # readers filter on the tenantId COLUMN (pruned via row-group stats).
+        table = VersionedTable(spec.output_path)
+        if not streaming:
+            return lambda batch, _batch_id: table.append(batch)
+        # The checkpoint location IS the stream identity: batch ids are
+        # monotonic per checkpoint, so replay-dedup state is scoped to it.
+        # Resuming a pre-existing checkpoint whose history committed under
+        # the legacy app-unscoped id aliases that watermark onto this one —
+        # only when the checkpoint's own offsets/commits log reaches it, so
+        # a RESET checkpoint (fresh ids 0..k) cannot inherit a larger legacy
+        # watermark and silently swallow batches k+1..W.
+        if os.path.isdir(spec.checkpoint):
+            table.migrate_default_app(
+                spec.checkpoint, committed_hint=_checkpoint_max_batch(spec.checkpoint)
+            )
+        return table.stream_batch_committer(app_id=spec.checkpoint)
+    if spec.sink_mode != "foreachBatch":
+        raise ValueError(f"unknown sink_mode {spec.sink_mode!r}")
+
+    def _append_tenant_dirs(batch: DataFrame, _batch_id) -> None:
+        batch.write.mode("append").partitionBy("tenantId").parquet(spec.output_path)
+
+    return _append_tenant_dirs
+
+
+def _save_or_start(frame: DataFrame, sink, spec: PipelineSpec, streaming: bool, suffix: str = ""):
+    """The one tail for every writer.  Batch: append once (a foreachBatch
+    body runs once over the whole ``frame``) and return None.  Streaming:
+    checkpoint at ``spec.checkpoint + suffix``, trigger availableNow
+    (drain-and-stop) or every ``spec.trigger_interval``, and return the
+    started query."""
+    if not streaming:
+        if callable(sink):
+            sink(frame, None)
+        else:
+            sink.mode("append").save()
+        return None
+    writer = frame.writeStream.foreachBatch(sink) if callable(sink) else sink
+    writer = writer.option("checkpointLocation", spec.checkpoint + suffix)
+    if spec.trigger_interval:
+        return writer.trigger(processingTime=spec.trigger_interval).start()
+    return writer.trigger(availableNow=True).start()
+
+
 def run_pipeline(spark: SparkSession, spec: PipelineSpec, streaming: bool = True):
     """Execute the pipeline.  Streaming: returns a :class:`PipelineRun`
     holding the main sink's StreamingQuery and, when configured, the
-    dead-letter sink's (availableNow drain-and-stop by default; set
-    spec.trigger_interval for a continuously-running service); batch:
-    writes once and returns None."""
-    built = build_cmf_stream(spark, spec, streaming=streaming)
-    wire, dead = built if isinstance(built, tuple) else (built, None)
-    routable = filter_routable(extract_tenant(wire))
-    out = routable.select("tenantId", "value")
+    dead-letter sink's; batch: writes once and returns None."""
+    if streaming and not spec.checkpoint:
+        raise ValueError("a streaming pipeline needs PipelineSpec.checkpoint")
+    wire, dead = build_cmf_stream(spark, spec, streaming=streaming)
+    out = filter_routable(extract_tenant(wire)).select("tenantId", "value")
     # Per-batch observability (the reference only log-lines these —
     # GeotabTranslator.kt:154-157): routed count + distinct-tenant count
     # land in StreamingQueryProgress.observedMetrics / Observation.get.
@@ -200,146 +253,11 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec, streaming: bool = True
         F.count(F.lit(1)).alias("routed"),
         F.approx_count_distinct("tenantId").alias("tenants"),
     )
-    if spec.publish is not None:
-        # relay topology: publish per-tenant instead of landing parquet
-        from pulsar_ingestion_spark.sources.registry import open_topic_sink
-
-        opts = dict(spec.publish)
-        kind = opts.pop("kind")
-        # topic_template puts the tenant ANYWHERE in the topic URI — the
-        # reference Filterer routes to
-        # persistent://${tenantId}/integration/telemetry (tenant mid-URL,
-        # Filterer.kt dynamic outputs), which a prefix alone can't express
-        # (ADVICE r10).  `{tenant}` is the substitution point; every
-        # occurrence is replaced.  topic_prefix remains the simple form.
-        template = opts.pop("topic_template", None)
-        prefix = opts.pop("topic_prefix", "tenant-")
-        if template is not None:
-            parts = template.split("{tenant}")
-            if len(parts) < 2:
-                raise ValueError(
-                    "publish.topic_template must contain '{tenant}' "
-                    f"(got {template!r})"
-                )
-            cols = []
-            for i, p in enumerate(parts):
-                if p:
-                    cols.append(F.lit(p))
-                if i < len(parts) - 1:
-                    cols.append(F.col("tenantId"))
-            topic_expr = F.concat(*cols)
-        else:
-            topic_expr = F.concat(F.lit(prefix), F.col("tenantId"))
-        topic_frame = out.select(topic_expr.alias("__route_topic"), "value")
-        writer = open_topic_sink(
-            topic_frame, kind, streaming=streaming,
-            topic_column="__route_topic", **opts,
-        )
-        if not streaming:
-            writer.mode("append").save()
-            if dead is not None:
-                dead.write.mode("append").parquet(spec.dead_letter_path)
-            return None
-        assert spec.checkpoint, "streaming pipeline needs a checkpoint dir"
-        dead_query = None
-        if dead is not None:
-            dead_query = (
-                _with_trigger(
-                    dead.writeStream.format("parquet")
-                    .option("path", spec.dead_letter_path)
-                    .option("checkpointLocation", spec.checkpoint + "-dead"),
-                    spec,
-                ).start()
-            )
-        main = _with_trigger(
-            writer.option("checkpointLocation", spec.checkpoint), spec
-        ).start()
-        return PipelineRun(main=main, dead_letter=dead_query)
-
-    if not streaming:
-        out.write.mode("append").partitionBy("tenantId").parquet(spec.output_path)
-        if dead is not None:
-            dead.write.mode("append").parquet(spec.dead_letter_path)
-        return None
+    sink = _routed_writer(spec, out, streaming)
     dead_query = None
     if dead is not None:
-        assert spec.checkpoint, "streaming pipeline needs a checkpoint dir"
-        dead_query = (
-            _with_trigger(
-                dead.writeStream.format("parquet")
-                .option("path", spec.dead_letter_path)
-                .option("checkpointLocation", spec.checkpoint + "-dead"),
-                spec,
-            ).start()
-        )
-
-    assert spec.checkpoint, "streaming pipeline needs a checkpoint dir"
-    if spec.sink_mode == "native":
-        # Transactional file sink: files become visible only via the
-        # _spark_metadata commit log — exactly-once even across mid-batch
-        # crashes.  partitionBy still gives the per-tenant layout.
-        main = (
-            _with_trigger(
-                out.writeStream.format("parquet")
-                .partitionBy("tenantId")
-                .option("path", spec.output_path)
-                .option("checkpointLocation", spec.checkpoint),
-                spec,
-            ).start()
-        )
-        return PipelineRun(main=main, dead_letter=dead_query)
-
-    if spec.sink_mode == "versioned":
-        # Manifest-committed sink: replayed batches are no-ops (batch id
-        # rides in the manifest), readers get snapshot isolation and time
-        # travel over the landed history.  Note: the versioned layout is
-        # file-list based, not tenant-partition-dir based — downstream
-        # readers filter on the tenantId COLUMN (still pruned via parquet
-        # row-group stats).
-        from pulsar_ingestion_spark.operators.versioned import VersionedTable
-
-        table = VersionedTable(spec.output_path)
-        # the checkpoint location IS the stream identity: batch ids are
-        # monotonic per checkpoint, so replay-dedup state must be scoped
-        # to it (a reset checkpoint = a new app_id = fresh batch ids).
-        # Resuming a PRE-EXISTING checkpoint whose history committed
-        # app-unscoped (pre-r7 __default__) batches: alias the legacy
-        # watermark onto this app_id so replayed old batches still no-op.
-        # The alias is evidence-gated (ADVICE r8): dir existence alone
-        # would also fire on every restart of a RESET checkpoint (fresh
-        # ids 0..k) against a table with a legacy watermark W>k and
-        # silently swallow batches k+1..W — so the checkpoint's own
-        # offsets/commits log must show it produced ids reaching the
-        # legacy watermark, and migrate_default_app additionally only
-        # acts before the app has any watermark of its own.
-        import os as _os
-
-        if _os.path.isdir(spec.checkpoint):
-            table.migrate_default_app(
-                spec.checkpoint,
-                committed_hint=_checkpoint_max_batch(spec.checkpoint),
-            )
-        main = (
-            _with_trigger(
-                out.writeStream.foreachBatch(
-                    table.stream_batch_committer(app_id=spec.checkpoint)
-                )
-                .option("checkpointLocation", spec.checkpoint),
-                spec,
-            ).start()
-        )
-        return PipelineRun(main=main, dead_letter=dead_query)
-
-    def _write(batch: DataFrame, epoch_id: int) -> None:
-        w = batch.write.mode("append")
-        if spec.max_records_per_file:
-            w = w.option("maxRecordsPerFile", spec.max_records_per_file)
-        w.partitionBy("tenantId").parquet(spec.output_path)
-
-    main = (
-        _with_trigger(
-            out.writeStream.foreachBatch(_write).option("checkpointLocation", spec.checkpoint),
-            spec,
-        ).start()
-    )
-    return PipelineRun(main=main, dead_letter=dead_query)
+        dead_writer = dead.writeStream if streaming else dead.write
+        dead_writer = dead_writer.format("parquet").option("path", spec.dead_letter_path)
+        dead_query = _save_or_start(dead, dead_writer, spec, streaming, suffix="-dead")
+    main = _save_or_start(out, sink, spec, streaming)
+    return PipelineRun(main=main, dead_letter=dead_query) if streaming else None

@@ -91,9 +91,8 @@ def open_source(
                  that drops JSON lines into `path` (same as jsonl)
     """
     kind = kind.lower()
+    reader = spark.readStream if streaming else spark.read
     if kind in ("jsonl", "rabbitmq", "http", "grpc"):
-        path = options["path"]
-        reader = spark.readStream if streaming else spark.read
         # micro-batch granularity knob (streaming only): bounds each
         # epoch's file intake, so checkpoint recovery is exercised over
         # MANY commits instead of one availableNow mega-batch.
@@ -102,18 +101,15 @@ def open_source(
             reader = reader.option("maxFilesPerTrigger", int(mfpt))
         # text() preserves the original byte-identical line — the Filterer
         # passthrough invariant needs the raw string, never a re-serialize.
-        return reader.text(path).withColumnRenamed("value", "value")
+        return reader.text(options["path"])
     if kind in ("parquet", "orc"):
         # Columnar file sources (both built into Spark — no extra jars).
         path = options["path"]
         value_col = options.get("value_col", "value")
-        batch_reader = getattr(spark.read, kind)
         if streaming:
             # streaming file sources need an explicit schema
-            schema = batch_reader(path).schema
-            df = getattr(spark.readStream.schema(schema), kind)(path)
-        else:
-            df = batch_reader(path)
+            reader = reader.schema(getattr(spark.read, kind)(path).schema)
+        df = getattr(reader, kind)(path)
         if value_col != "value":
             df = df.withColumn("value", F.col(value_col))
         return df
@@ -123,7 +119,6 @@ def open_source(
         path = options.pop("path")
         schema = options.pop("schema", None)
         value_col = options.pop("value_col", None)
-        reader = spark.readStream if streaming else spark.read
         if schema is not None:
             reader = reader.schema(schema)
         elif streaming:
@@ -138,7 +133,7 @@ def open_source(
         if not streaming:
             raise ValueError("rate source is streaming-only")
         rps = options.get("rows_per_second", 100)
-        df = spark.readStream.format("rate").option("rowsPerSecond", rps).load()
+        df = reader.format("rate").option("rowsPerSecond", rps).load()
         # synthesize a Geotab-ish JSON payload so the translator path runs
         return df.select(
             F.to_json(
@@ -151,31 +146,22 @@ def open_source(
                 )
             ).alias("value")
         )
+    # Broker connectors: config passthrough that resolves at deploy time;
+    # their payload column is binary → cast to the string JSON contract.
     if kind in ("kafka", "eventhub"):
-        reader = spark.readStream if streaming else spark.read
-        r = reader.format("kafka")
-        for k, v in kafka_reader_options(options).items():
-            r = r.option(k, v)
-        # kafka value is binary → the string JSON contract
-        return r.load().withColumn("value", F.col("value").cast("string"))
-    if kind == "pulsar":
-        # Config passthrough to the pulsar-spark connector (the north-star
-        # source, reference deployment/pipeline.yaml:35-39 relay) — the
-        # connector jar resolves at deploy time; broker-less local runs
-        # use the jsonl bridge instead (plans/from_yaml.py path override).
-        reader = spark.readStream if streaming else spark.read
-        r = reader.format(options.pop("format", "pulsar"))
-        for k, v in pulsar_reader_options(options).items():
-            r = r.option(k, v)
-        # pulsar value is binary → the string JSON contract
-        return r.load().withColumn("value", F.col("value").cast("string"))
-    if kind == "kinesis":
-        reader = spark.readStream if streaming else spark.read
-        r = reader.format(options.pop("format", "aws-kinesis"))
-        for k, v in options.items():
-            r = r.option(k, v)
-        return r.load().withColumn("value", F.col("data").cast("string"))
-    raise ValueError(f"unknown source kind: {kind} (known: {SOURCE_KINDS})")
+        fmt, opts, payload = "kafka", kafka_reader_options(options), "value"
+    elif kind == "pulsar":
+        # the north-star source (reference deployment/pipeline.yaml:35-39
+        # relay); broker-less local runs use the jsonl bridge instead
+        # (plans/from_yaml.py path override).
+        fmt = options.pop("format", "pulsar")
+        opts, payload = pulsar_reader_options(options), "value"
+    elif kind == "kinesis":
+        fmt, opts, payload = options.pop("format", "aws-kinesis"), options, "data"
+    else:
+        raise ValueError(f"unknown source kind: {kind} (known: {SOURCE_KINDS})")
+    df = reader.format(fmt).options(**opts).load()
+    return df.withColumn("value", F.col(payload).cast("string"))
 
 
 SINK_KINDS = ("pulsar", "kafka", "eventhub", "jsonl")

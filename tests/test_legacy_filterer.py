@@ -98,16 +98,6 @@ def test_filterer_routing_matrix(spark):
     assert rows[0]["topic"] == "persistent://acme-corp/integration/telemetry"
 
 
-def test_prepare_kafka_routing(spark):
-    from pulsar_ingestion_spark.operators.filterer import prepare_kafka_routing
-
-    df = _df(spark, _cmf_with_meta({"tenantId": "acme-corp"}), _cmf_with_meta({}))
-    out = prepare_kafka_routing(extract_tenant(df)).collect()
-    assert len(out) == 1  # unroutable dropped
-    assert out[0]["topic"] == "acme-corp.integration.telemetry"
-    assert out[0]["value"] == _cmf_with_meta({"tenantId": "acme-corp"})  # byte passthrough
-
-
 def test_route_to_tenant_dirs(spark, tmp_path):
     from pulsar_ingestion_spark.operators.filterer import route_to_tenant_dirs
 
